@@ -132,6 +132,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import seenset, segstore
 
 _ORDER_COLS = [
@@ -918,7 +919,7 @@ def dedup_candidates(
     state_schema = _META_STATE_SCHEMA if store_root is not None else _STATE_SCHEMA
     state_cols = _META_COLS if store_root is not None else _STATE_COLS
     if seen_state is None:
-        state_src = spark.createDataFrame([], state_schema)
+        state_src = local_frame(spark, [], state_schema)
     elif prune_state:
         # state-input pruning: only the buckets this batch touches enter the
         # cogroup. The distinct-bucket collect is BOUNDED (<= fan-out ints,

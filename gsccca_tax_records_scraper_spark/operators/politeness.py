@@ -135,6 +135,9 @@ def grant(
         .drop("__r")
     )
 
+    granted = granted.drop("budget", "tokens_before")
+    # count from the RETURNED frame: a caller that caches it then serves
+    # host_state_after from that cache instead of re-running the tournament
     granted_counts = granted.groupBy("host").agg(F.count("*").alias("granted_n"))
     host_state_after = (
         budgets.join(granted_counts, "host", "left")
@@ -145,4 +148,4 @@ def grant(
             F.lit(epoch).alias("epoch"),
         )
     )
-    return granted.drop("budget", "tokens_before"), host_state_after
+    return granted, host_state_after

@@ -19,7 +19,8 @@ bit-identically (north_rule, tested in tests/test_resume.py).
 Shuffle budget per epoch (the 100-TB story):
   - grant: 1 shuffle on (host, host_bucket) at full parallelism + 1 tiny
     shuffle on host over <= budget*n_buckets survivor rows (skew-safe).
-  - fetch: no shuffle (narrow mapInPandas over granted).
+  - fetch: 1 shuffle of the granted rows on url_id into defaultParallelism
+    partitions (one balanced wave of mapInPandas tasks).
   - dedup: 1 shuffle (the cogroup on host_bucket = url_id hash — balanced,
     no host skew); the bucket's whole seen set rides IN its state row as
     filters + packed sorted key arrays, so no seen-side join or aggregation
@@ -28,6 +29,26 @@ Shuffle budget per epoch (the 100-TB story):
     per-epoch Arrow AND parquet state traffic is O(touched buckets), with
     the probe/merge work O(batch).
   - writes are partition-local.
+
+Fixed cost per epoch (the part a small epoch pays whatever its size):
+  - every epoch intermediate runs once. The grant, fetched pages and
+    admitted rows are cached, and whatever reads them after the cache is
+    filled plans against the cache: host_state counts grants from the very
+    frame politeness.grant returns, so its checkpoint write reads the cached
+    grant instead of re-running the window tournament.
+  - no PythonRDD frames on the epoch path. Frames built from driver-side
+    lists (robots, metrics, seeds, revoke inputs) go through
+    session.local_frame and plan as a LocalTableScan; empty frames are
+    `limit(0)` of a frame that already exists. `spark.createDataFrame(list)`
+    would plan as a PythonRDD scan, which starts one Python task per core
+    every time it is read.
+  - Python stages run in one wave of at most defaultParallelism tasks: a
+    Python stage costs about 0.3 s per wave on a 4-core host even when its
+    tasks do nothing. Fetch input is spread over url_id (the grant's last
+    window hashes on host), SERP seeds are cut to <= one task per core, and
+    the session lets AQE coalesce the cached dedup output's partitions.
+  - job budget: a 2.5k-page drain step on 4 cores runs 40 Spark jobs (44
+    before these rules) and none of them scans a PythonRDD.
 """
 
 from __future__ import annotations
@@ -41,6 +62,7 @@ from pyspark.sql import functions as F
 from .. import sitegen
 from ..functions import extract, urltools
 from ..operators import dedup, politeness
+from ..session import local_frame
 from ..simulator import RobotsRule, default_robots
 from ..sources.checkpoint import CheckpointStore
 
@@ -221,8 +243,10 @@ class CrawlEngine:
             (h, list(r.disallow_prefixes), r.rate_per_sec, r.burst)
             for h, r in sorted(self.robots_rules.items())
         ]
-        return self.spark.createDataFrame(
-            rows, "host string, disallow_prefixes array<string>, rate_per_sec double, burst int"
+        return local_frame(
+            self.spark,
+            rows,
+            "host string, disallow_prefixes array<string>, rate_per_sec double, burst int",
         )
 
     @staticmethod
@@ -316,7 +340,11 @@ class CrawlEngine:
         )
 
     def _admit(
-        self, raw_candidates: DataFrame, epoch: int, n_cand_bound: int | None = None
+        self,
+        raw_candidates: DataFrame,
+        epoch: int,
+        robots: DataFrame,
+        n_cand_bound: int | None = None,
     ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
         """Junk filter + robots gate + dedup; returns (new_rows, seen_state',
         persisted handles to unpersist after the epoch's writes commit).
@@ -329,7 +357,6 @@ class CrawlEngine:
         relative to the fan-out, dedup prunes its state input to the
         touched buckets (worth one extra candidate scan); a batch >> fan-out
         touches every bucket anyway, so pruning is skipped."""
-        robots = self.robots_df()
         cands = self._finalize_candidates(raw_candidates, epoch)
         gated = politeness.apply_robots_gate(cands, robots)
         prev = self.store.last_epoch()
@@ -415,24 +442,13 @@ class CrawlEngine:
             st.write("records", epoch, records)
         if documents is not None:
             st.write("documents", epoch, documents)
-        mrows = [(epoch, -1, k, int(v)) for k, v in sorted(metric_counts.items())]
         # per-partition lineage/metrics (north_rule): admitted-per-bucket
         if bucket_counts is None:
             bucket_counts = {
                 int(r["host_bucket"]): int(r["n"])
                 for r in new_rows.groupBy("host_bucket").agg(F.count("*").alias("n")).collect()
             }
-        per_bucket = [
-            (epoch, b, "admitted", n) for b, n in sorted(bucket_counts.items())
-        ]
-        st.write(
-            "metrics",
-            epoch,
-            self.spark.createDataFrame(
-                (mrows + per_bucket) or [(epoch, -1, "noop", 0)],
-                "epoch int, host_bucket int, metric string, value long",
-            ),
-        )
+        st.write("metrics", epoch, self._metrics_frame(epoch, metric_counts, bucket_counts))
         # fold the per-epoch seen_exact deltas periodically so resume reads
         # stay O(1) dirs instead of O(epochs); takes effect at this commit.
         # Per-epoch deltas keep the bucket labels of the fan-out that
@@ -482,6 +498,21 @@ class CrawlEngine:
         if compacted and self._seg_root is not None:
             self._gc_segments()
 
+    def _metrics_frame(
+        self, epoch: int, metric_counts: dict[str, int], bucket_counts: dict[int, int]
+    ) -> DataFrame:
+        """The epoch's metrics delta: engine-wide counts (host_bucket -1)
+        plus admitted-per-bucket."""
+        mrows = [(epoch, -1, k, int(v)) for k, v in sorted(metric_counts.items())]
+        per_bucket = [
+            (epoch, b, "admitted", n) for b, n in sorted(bucket_counts.items())
+        ]
+        return local_frame(
+            self.spark,
+            (mrows + per_bucket) or [(epoch, -1, "noop", 0)],
+            "epoch int, host_bucket int, metric string, value long",
+        )
+
     def _gc_segments(self) -> int:
         """Reclaim segment files no committed seen_state row references.
         The referenced set is EVERY filename readable under EVERY retained
@@ -527,7 +558,7 @@ class CrawlEngine:
         """Search-phase candidate rows: seeds -> synthetic SERP pages ->
         extracted links (reference: get_search_results,
         lien_index_scraper.py:362-549). Used by bootstrap and reseed."""
-        seeds = self.spark.createDataFrame([(int(s),) for s in seed_ids], "seed_id long")
+        seeds = local_frame(self.spark, [(int(s),) for s in seed_ids], "seed_id long")
 
         def gen_serp(it):
             for pdf in it:
@@ -542,7 +573,9 @@ class CrawlEngine:
                             )
                 yield pd.DataFrame(rows, columns=_CANDIDATE_COLS)
 
-        return seeds.repartition(max(2, min(32, len(seed_ids)))).mapInPandas(
+        # at most one task per core: one wave of Python tasks
+        n_parts = max(1, min(self.spark.sparkContext.defaultParallelism, len(seed_ids)))
+        return seeds.repartition(n_parts).mapInPandas(
             gen_serp,
             "url string, seed_id long, page int, link_order int, depth int, parent_url_id long",
         )
@@ -555,11 +588,11 @@ class CrawlEngine:
         # epoch 0)
         self.store.set_meta("state_backend", self.state_backend)
         raw = self._serp_raw_candidates(seed_ids)
-        new_rows, state, handles = self._admit(raw, 0)
+        new_rows, state, handles = self._admit(raw, 0, self.robots_df())
         new_rows = new_rows.cache()
         n_admitted = new_rows.count()
-        empty_host_state = self.spark.createDataFrame(
-            [], "host string, tokens double, epoch int"
+        empty_host_state = local_frame(
+            self.spark, [], "host string, tokens double, epoch int"
         )
         state, frontier0, _split = self._maybe_split(state, new_rows, 0)
         self._write_epoch(
@@ -595,7 +628,7 @@ class CrawlEngine:
         pending = self.store.read_snapshot(self.spark, "frontier", prev)
         if pending.isEmpty():
             return None
-        robots = self.robots_df()
+        robots = self.robots_df()  # built once: budgets and the admission gate
         prev_host_state = self.store.read_snapshot(self.spark, "host_state", prev)
 
         budgets = politeness.compute_budgets(
@@ -616,13 +649,12 @@ class CrawlEngine:
             # zero-grant epoch (tokens still fractional): commit the token
             # accrual and carry on — the simulator does the same; returning
             # None here would abandon a non-empty frontier
-            granted.unpersist()
-            empty_rows = self.spark.createDataFrame([], pending.schema)
             self._write_epoch(
                 epoch, pending, self._read_seen_state(prev),
-                host_state, empty_rows, None, None,
+                host_state, pending.limit(0), None, None,
                 {"granted": 0, "new_urls": 0, "cancelled": 0}, bucket_counts={},
             )
+            granted.unpersist()  # after host_state's write read it
             return {"epoch": epoch, "granted": 0, "new_urls": 0, "cancelled": 0}
 
         fetched = (
@@ -633,6 +665,9 @@ class CrawlEngine:
                 F.col("crawl_order.depth").alias("depth"),
                 F.col("crawl_order.link_order").alias("link_order"),
             )
+            # the grant's last window hashes on host, so its partitions
+            # carry only a few hosts' rows: spread the pages over one wave
+            .repartition(self.spark.sparkContext.defaultParallelism, "url_id")
             .mapInPandas(_fetch_parse, _FETCH_SCHEMA)
             .cache()
         )
@@ -664,7 +699,7 @@ class CrawlEngine:
             )
         )
         new_rows, seen_state, handles = self._admit(
-            children, epoch, n_cand_bound=n_granted * _OUTLINKS_BOUND
+            children, epoch, robots, n_cand_bound=n_granted * _OUTLINKS_BOUND
         )
         new_rows = new_rows.cache()
         # one action for all admission metrics (total + per-bucket)
@@ -722,7 +757,7 @@ class CrawlEngine:
         rev = (
             urls
             if isinstance(urls, DataFrame)
-            else self.spark.createDataFrame([(u,) for u in urls], "url string")
+            else local_frame(self.spark, [(u,) for u in urls], "url string")
         )
         uid = urltools.url_id_col(F.col("url"))
         n_requested = len(urls) if not isinstance(urls, DataFrame) else int(rev.count())
@@ -743,8 +778,8 @@ class CrawlEngine:
             (int(r[0]), int(r[1]))
             for r in delta.select("host_bucket", "seg").collect()
         ]
-        pairs_df = self.spark.createDataFrame(
-            changed_pairs or [(-1, -1)], "host_bucket int, seg int"
+        pairs_df = local_frame(
+            self.spark, changed_pairs or [(-1, -1)], "host_bucket int, seg int"
         )
         before = seen_state.join(
             F.broadcast(pairs_df), ["host_bucket", "seg"], "left_semi"
@@ -762,9 +797,8 @@ class CrawlEngine:
             epoch,
             rev.select("host_bucket", "url_id", "url", F.lit(epoch).alias("epoch")),
         )
-        empty_rows = self.spark.createDataFrame([], pending.schema)
         self._write_epoch(
-            epoch, pending, snapshot, host_state, empty_rows, None, None,
+            epoch, pending, snapshot, host_state, pending.limit(0), None, None,
             {"revoked_requested": n_requested, "revoked_removed": n_removed},
             bucket_counts={},
         )
@@ -785,7 +819,7 @@ class CrawlEngine:
         raw = self._serp_raw_candidates(seed_ids)
         # SERP fan-out bound: <= 3 pages x <= 10 links per seed (sitegen)
         new_rows, state, handles = self._admit(
-            raw, epoch, n_cand_bound=len(seed_ids) * 30
+            raw, epoch, self.robots_df(), n_cand_bound=len(seed_ids) * 30
         )
         new_rows = new_rows.cache()
         bucket_counts = {
@@ -839,9 +873,8 @@ class CrawlEngine:
         host_state = st.read_snapshot(self.spark, "host_state", prev).select(
             "host", "tokens", F.lit(epoch).cast("int").alias("epoch")
         )
-        empty_rows = self.spark.createDataFrame([], frontier.schema)
         self._write_epoch(
-            epoch, frontier, folded, host_state, empty_rows, None, None,
+            epoch, frontier, folded, host_state, frontier.limit(0), None, None,
             {"fold_segments_before": segs_before},
             bucket_counts={},
         )

@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 
 def get_spark(
@@ -22,9 +25,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    cores=None -> local[*]. shuffle_partitions defaults to the core count:
-    at cluster scale this would be ~2-3x total executor cores; AQE coalesces
-    small shuffles back down either way.
+    cores=None -> $SPARK_GRAFT_CPUS, else the machine's CPU count.
+    shuffle_partitions defaults to max(cores, 8): at cluster scale this
+    would be ~2-3x total executor cores; AQE coalesces small shuffles back
+    down either way.
 
     executors=(n, cores_each, mem_mb) runs in local-cluster mode: n REAL
     executor JVMs forked on this machine, each with its own heap/GC/python
@@ -53,6 +57,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # a persisted plan otherwise keeps its final stage's partitioning, so
+        # AQE never coalesces the tiny shuffle partitions of a cached epoch
+        # intermediate (the dedup cogroup output) and every downstream
+        # Python stage runs one near-empty task per shuffle partition
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -101,6 +110,19 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     _warm_session(spark)
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small driver-built frame (`rows` of tuples, `schema` in DDL) sent
+    to the JVM as one Arrow table. It plans as a LocalTableScan, so scanning
+    it starts no Python worker; `spark.createDataFrame(<list>)` would plan
+    as a PythonRDD scan that starts one Python task per core on every use.
+    Empty `rows` give an empty frame of the schema."""
+    struct = DataType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
 
 
 # applicationIds whose engine machinery has been warmed (getOrCreate can

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import sitegen
 from ..functions import urltools
+from ..session import local_frame
 
 FORM_FIELDS = [
     "party_type",
@@ -75,7 +76,7 @@ def expand_forms(spark: SparkSession, forms: list[dict]) -> DataFrame:
     for form in forms:
         f = normalize_form(form)
         rows.append((seed_id_of_form(form), *[f[k] for k in FORM_FIELDS]))
-    return spark.createDataFrame(rows, f"seed_id long, {FORM_SCHEMA}")
+    return local_frame(spark, rows, f"seed_id long, {FORM_SCHEMA}")
 
 
 def realestate_entity_frontier(spark: SparkSession, forms: list[dict]) -> DataFrame:
@@ -106,6 +107,6 @@ def realestate_entity_frontier(spark: SparkSession, forms: list[dict]) -> DataFr
                 out, columns=["url", "status", "search_name", "entity_index", "doc_index"]
             )
 
-    return forms_df.repartition(max(2, min(32, len(forms)))).mapInPandas(
-        expand, _FRONTIER_SCHEMA
-    )
+    # at most one task per core: one wave of Python tasks
+    n_parts = max(1, min(spark.sparkContext.defaultParallelism, len(forms)))
+    return forms_df.repartition(n_parts).mapInPandas(expand, _FRONTIER_SCHEMA)
