@@ -184,21 +184,31 @@ def order_cols() -> list:
 
 
 def _flatten(df: DataFrame) -> DataFrame:
+    """FRONTIER rows -> the slim cogroup payload plus the probe hash.
+    lin_parent is the only nullable int64 (seed rows have no parent): a
+    batch mixing nulls with 60-bit ids would cross Arrow as float64 and
+    silently corrupt the ids, so nulls ride as -1 (_unflatten restores
+    them)."""
     return df.select(
         "url_id", "url", "host_bucket", "priority",
         F.col("crawl_order.seed_id").alias("co_seed_id"),
         F.col("crawl_order.page").alias("co_page"),
         F.col("crawl_order.link_order").alias("co_link_order"),
         F.col("crawl_order.depth").alias("co_depth"),
-        F.col("lineage.parent_url_id").alias("lin_parent"),
+        F.coalesce(F.col("lineage.parent_url_id"), F.lit(-1).cast("long")).alias("lin_parent"),
+        F.xxhash64("url").alias("url_h"),
     )
 
 
 def _unflatten(df: DataFrame, epoch: int) -> DataFrame:
     """Rebuild the FRONTIER shape from the slim payload: host from the url
     (codegen'd regexp), status "" (fresh candidates by contract), lineage
-    seed/depth from crawl_order, discovered_epoch = the admitting epoch."""
+    seed/depth from crawl_order, the -1 parent back to null,
+    discovered_epoch = the admitting epoch."""
     host = F.lower(F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1))
+    parent = F.when(F.col("lin_parent") == -1, F.lit(None).cast("long")).otherwise(
+        F.col("lin_parent")
+    )
     return df.select(
         "url_id", "url", host.alias("host"), "host_bucket", "priority",
         F.struct(
@@ -209,7 +219,7 @@ def _unflatten(df: DataFrame, epoch: int) -> DataFrame:
         ).alias("crawl_order"),
         F.lit("").alias("status"),
         F.struct(
-            F.col("lin_parent").alias("parent_url_id"),
+            parent.alias("parent_url_id"),
             F.col("co_seed_id").alias("seed_id"),
             F.col("co_depth").alias("depth"),
             F.lit(epoch).cast("int").alias("discovered_epoch"),
@@ -228,10 +238,6 @@ def keep_first_in_batch(candidates: DataFrame) -> DataFrame:
     )
 
 
-_PAYLOAD_COLS = [
-    "url_id", "url", "host_bucket", "priority",
-    "co_seed_id", "co_page", "co_link_order", "co_depth", "lin_parent",
-]
 _OUT_SCHEMA = (
     _FLAT_SCHEMA
     + ", seg int, lo int, bloom binary, cuckoo binary, ids binary, hs binary, "
@@ -909,13 +915,7 @@ def dedup_candidates(
     is exactly the politeness-limited regime where state >> batch.
     """
     spark = candidates.sparkSession
-    # lin_parent is the only nullable int64 (seed rows have no parent): a
-    # batch mixing nulls with 60-bit ids would cross Arrow as float64 and
-    # silently corrupt the ids, so nulls ride as -1 and are restored after
-    flat = _flatten(candidates).withColumn(
-        "lin_parent", F.coalesce(F.col("lin_parent"), F.lit(-1).cast("long"))
-    )
-    cand_side = flat.select(*_PAYLOAD_COLS, F.xxhash64("url").alias("url_h"))
+    cand_side = _flatten(candidates)
     state_schema = _META_STATE_SCHEMA if store_root is not None else _STATE_SCHEMA
     state_cols = _META_COLS if store_root is not None else _STATE_COLS
     if seen_state is None:
@@ -973,10 +973,5 @@ def dedup_candidates(
             "left_anti",
         )
         updated_state = changed.unionByName(carried)
-    new_flat = out.filter(F.col(state_marker).isNull()).select(*_PAYLOAD_COLS).withColumn(
-        "lin_parent",
-        F.when(F.col("lin_parent") == -1, F.lit(None).cast("long")).otherwise(
-            F.col("lin_parent")
-        ),
-    )
+    new_flat = out.filter(F.col(state_marker).isNull())
     return _unflatten(new_flat, epoch), updated_state, [out]

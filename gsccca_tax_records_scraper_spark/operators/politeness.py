@@ -11,6 +11,11 @@ and the grant set is the first `budget` pending frontier rows of that host in
 the total crawl order (depth, seed_id, page, link_order, url_id) — so grant
 order reproduces the reference's FIFO (north_rule).
 
+The bucket itself is driver-side arithmetic over one row per host
+(`compute_budgets`): the engine collects the per-host pending counts, and
+only the resulting budgets enter Spark, as a small broadcast frame for the
+grant.
+
 Skew: the whole crawl hits search.gsccca.org (SURVEY §4.1), so a naive
 `Window.partitionBy(host)` puts ~100% of rows in one task. Grants are
 therefore computed in two phases:
@@ -29,10 +34,15 @@ enter the frontier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+from ..simulator import RobotsRule
 from .dedup import order_cols
+
+# politeness for a host without a robots rule (the simulator's default)
+_DEFAULT_RULE = RobotsRule((), 1.0, 1)
 
 
 def jitter_ms_col(url_id, lo_ms: int = 3000, hi_ms: int = 5000, seed: int = 42):
@@ -60,39 +70,49 @@ def apply_robots_gate(candidates: DataFrame, robots: DataFrame) -> DataFrame:
 
 
 def compute_budgets(
-    pending: DataFrame,
-    robots: DataFrame,
-    host_state: DataFrame | None,
+    backlog: dict[str, int],
+    rules: dict[str, RobotsRule],
+    tokens: dict[str, float],
     epoch_seconds: float,
-) -> DataFrame:
-    """One row per host with a pending URL: (host, budget, tokens_before).
-    tokens carry over epochs capped at rate*T + burst (matches simulator)."""
-    hosts = pending.select("host").distinct()
-    joined = hosts.join(F.broadcast(robots.select("host", "rate_per_sec", "burst")), "host", "left")
-    joined = joined.withColumn("rate_per_sec", F.coalesce("rate_per_sec", F.lit(1.0)))
-    joined = joined.withColumn("burst", F.coalesce("burst", F.lit(1)))
-    if host_state is not None:
-        joined = joined.join(host_state.select("host", "tokens"), "host", "left")
-        joined = joined.withColumn("carry", F.coalesce("tokens", F.lit(0.0))).drop("tokens")
-    else:
-        joined = joined.withColumn("carry", F.lit(0.0))
-    refill = F.col("rate_per_sec") * F.lit(epoch_seconds)
-    tok = F.least(F.col("carry") + refill, refill + F.col("burst"))
-    return joined.withColumn("tokens_before", tok).withColumn(
-        "budget", F.floor(tok).cast("long")
-    ).select("host", "budget", "tokens_before")
+) -> tuple[dict[str, int], dict[str, float]]:
+    """The token bucket, on the driver. `backlog` maps each host with a
+    pending URL to its pending count, `tokens` each host's carry from the
+    previous epoch (0 for a host never seen); a host with no robots rule
+    gets rate 1/s, burst 1. Returns (budgets, tokens_after):
+
+        tokens_before = min(carry + rate*T, rate*T + burst)
+        budget        = floor(tokens_before)
+        tokens_after  = tokens_before - min(budget, backlog)
+
+    since the grant takes the first min(budget, backlog) rows of a host. A
+    host with no pending URL keeps its carry untouched. This is the
+    simulator's arithmetic, operation for operation, so the floats are
+    identical. One entry per pending host: bounded by the host set the
+    grant broadcasts anyway."""
+    budgets, after = {}, dict(tokens)
+    for host, n in backlog.items():
+        rule = rules.get(host, _DEFAULT_RULE)
+        refill = rule.rate_per_sec * epoch_seconds
+        tok = min(tokens.get(host, 0.0) + refill, refill + rule.burst)
+        budgets[host] = int(tok)
+        after[host] = tok - min(budgets[host], n)
+    return budgets, after
+
+
+def budget_frame(spark: SparkSession, budgets: dict[str, int]) -> DataFrame:
+    """`compute_budgets`' budgets as the (host, budget) frame `grant` joins."""
+    return local_frame(spark, sorted(budgets.items()), "host string, budget long")
 
 
 def grant(
     pending: DataFrame,
     budgets: DataFrame,
-    epoch: int,
     fan_in: int = 8,
     n_buckets: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (granted_rows, host_state_after). Grant = first `budget`
-    pending rows per host in total crawl order (exact FIFO parity with the
-    reference), computed skew-free as a fan-in tournament:
+) -> DataFrame:
+    """The granted rows: the first `budget` pending rows per host in total
+    crawl order (exact FIFO parity with the reference), computed skew-free
+    as a fan-in tournament:
 
       level 0   rank within (host, host_bucket), keep local_rank <= budget —
                 full parallelism over the salted buckets, provable superset.
@@ -104,12 +124,13 @@ def grant(
     single global per-host window — at cluster budgets of ~1e6 and 4096
     buckets that would be ~4e9 rows in ONE task). Levels = log_fan(buckets),
     each an exact keep-first-budget, so the composition is the exact
-    per-host top-budget."""
+    per-host top-budget. `budgets` has one (host, budget) row per host;
+    a pending host without one is granted nothing."""
     from ..functions.urltools import N_HOST_BUCKETS
 
     if n_buckets is None:
         n_buckets = N_HOST_BUCKETS
-    with_budget = pending.join(F.broadcast(budgets), "host", "inner")
+    with_budget = pending.join(F.broadcast(budgets.select("host", "budget")), "host", "inner")
 
     w_local = Window.partitionBy("host", "host_bucket").orderBy(*order_cols())
     survivors = (
@@ -129,23 +150,8 @@ def grant(
         )
         div *= fan_in
     w_host = Window.partitionBy("host").orderBy(*order_cols())
-    granted = (
+    return (
         survivors.withColumn("__r", F.row_number().over(w_host))
         .filter(F.col("__r") <= F.col("budget"))
-        .drop("__r")
+        .drop("__r", "budget")
     )
-
-    granted = granted.drop("budget", "tokens_before")
-    # count from the RETURNED frame: a caller that caches it then serves
-    # host_state_after from that cache instead of re-running the tournament
-    granted_counts = granted.groupBy("host").agg(F.count("*").alias("granted_n"))
-    host_state_after = (
-        budgets.join(granted_counts, "host", "left")
-        .withColumn("granted_n", F.coalesce("granted_n", F.lit(0)))
-        .select(
-            "host",
-            (F.col("tokens_before") - F.col("granted_n")).alias("tokens"),
-            F.lit(epoch).alias("epoch"),
-        )
-    )
-    return granted, host_state_after

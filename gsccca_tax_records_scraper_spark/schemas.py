@@ -1,9 +1,16 @@
-"""Fixed StructType schemas for every engine table (SURVEY §1.2-1.3).
+"""The schema of every checkpoint table the crawl engine writes (SURVEY §1.2-1.3).
 
 The reference's schemas are fixed-by-convention dict/Excel-header rows
 (reference: scrapers/lien_index_scraper.py:162-176, dashboard/models.py:4-32);
-here every table is declared up front so Catalyst can prune columns and the
-parquet scans carry exact ReadSchemas.
+here every table is declared up front, in the column order the engine
+writes it. The checkpoint store reads with these schemas instead of
+inferring one from the parquet footers (sources/checkpoint.py), and the
+driver-built tables (host_state, metrics) are written from Arrow with them.
+tests/test_schemas.py checks that each table the engine writes reads back
+with exactly these field names and types.
+
+Parquet reads make every field nullable, so only names and types are
+checked on read; the nullability flags here document the invariants.
 """
 
 from __future__ import annotations
@@ -24,6 +31,7 @@ SPAN = T.StructType(
 DOCUMENTS = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
+        T.StructField("url", T.StringType(), False),
         T.StructField("spans", T.ArrayType(SPAN), False),
     ]
 )
@@ -66,32 +74,9 @@ FRONTIER = T.StructType(
     ]
 )
 
-SEEDS = T.StructType(
-    [
-        T.StructField("seed_id", T.LongType(), False),
-        T.StructField("pipeline", T.StringType(), False),  # lien | realestate
-        T.StructField("county_id", T.IntegerType(), False),
-        T.StructField("instrument_code", T.StringType(), False),
-        T.StructField("party_type", T.StringType(), False),
-        T.StructField("search_name", T.StringType(), False),
-        T.StructField("from_date", T.StringType(), False),  # MM/DD/YYYY
-        T.StructField("to_date", T.StringType(), False),
-        T.StructField("max_rows", T.IntegerType(), False),
-    ]
-)
-
-SERP = T.StructType(
-    [
-        T.StructField("seed_id", T.LongType(), False),
-        T.StructField("page", T.IntegerType(), False),
-        T.StructField("html", T.StringType(), False),
-        T.StructField("n_links", T.IntegerType(), False),
-    ]
-)
-
 # fetched + parsed detail page -> one record row (reference record dict,
 # scrapers/lien_index_scraper.py:600-753)
-RECORD = T.StructType(
+RECORDS = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("url_id", T.LongType(), False),
@@ -107,6 +92,7 @@ RECORD = T.StructType(
         T.StructField("amount_value", T.DoubleType(), True),
         T.StructField("address", T.StringType(), True),
         T.StructField("description", T.StringType(), True),
+        T.StructField("pdf_document_url", T.StringType(), True),
         T.StructField("media_ref", T.StringType(), True),
         T.StructField("cancelled", T.BooleanType(), False),
         T.StructField("epoch", T.IntegerType(), False),
@@ -114,21 +100,35 @@ RECORD = T.StructType(
     ]
 )
 
+# admitted urls per epoch (seen_exact) and revoked urls per epoch (revoked)
 SEEN = T.StructType(
     [
+        T.StructField("host_bucket", T.IntegerType(), False),
         T.StructField("url_id", T.LongType(), False),
         T.StructField("url", T.StringType(), False),
-        T.StructField("host_bucket", T.IntegerType(), False),
         T.StructField("epoch", T.IntegerType(), False),
     ]
 )
 
 # seen-set state: per host_bucket, a stack of immutable SEGMENT rows (LSM);
-# each row is one sorted run — filters sized to the run + packed key arrays.
-# seg = the run's id within its bucket (newer = higher); the row supersedes
-# segments in [lo, seg) (lo == seg for a pure append). A bucket's live seen
-# set is the union of its un-superseded rows (operators/dedup.py).
+# each row is one sorted run. seg = the run's id within its bucket (newer =
+# higher); the row supersedes segments in [lo, seg) (lo == seg for a pure
+# append). A bucket's live seen set is the union of its un-superseded rows
+# (operators/dedup.py). With the segment store (the default backend) a row
+# names the content-addressed payload file holding the run's filters and
+# packed keys (operators/segstore.py) ...
 SEEN_STATE = T.StructType(
+    [
+        T.StructField("host_bucket", T.IntegerType(), False),
+        T.StructField("seg", T.IntegerType(), False),
+        T.StructField("lo", T.IntegerType(), False),
+        T.StructField("n_items", T.LongType(), False),
+        T.StructField("epoch", T.IntegerType(), False),
+        T.StructField("file", T.StringType(), False),
+    ]
+)
+# ... and with the inline backend the payload rides in the row itself
+SEEN_STATE_INLINE = T.StructType(
     [
         T.StructField("host_bucket", T.IntegerType(), False),
         T.StructField("seg", T.IntegerType(), False),
@@ -142,15 +142,7 @@ SEEN_STATE = T.StructType(
     ]
 )
 
-ROBOTS = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("disallow_prefixes", T.ArrayType(T.StringType()), False),
-        T.StructField("rate_per_sec", T.DoubleType(), False),
-        T.StructField("burst", T.IntegerType(), False),
-    ]
-)
-
+# per-host token bucket after the epoch (politeness.compute_budgets)
 HOST_STATE = T.StructType(
     [
         T.StructField("host", T.StringType(), False),
@@ -159,6 +151,7 @@ HOST_STATE = T.StructType(
     ]
 )
 
+# engine-wide counts (host_bucket -1) and admitted-per-bucket, per epoch
 METRICS = T.StructType(
     [
         T.StructField("epoch", T.IntegerType(), False),
@@ -167,3 +160,15 @@ METRICS = T.StructType(
         T.StructField("value", T.LongType(), False),
     ]
 )
+
+# every checkpoint table with one layout; seen_state's layout depends on
+# the engine's state backend, so its readers pass the schema themselves
+CHECKPOINT = {
+    "frontier": FRONTIER,
+    "host_state": HOST_STATE,
+    "seen_exact": SEEN,
+    "records": RECORDS,
+    "documents": DOCUMENTS,
+    "metrics": METRICS,
+    "revoked": SEEN,
+}

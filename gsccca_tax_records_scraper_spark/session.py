@@ -13,7 +13,7 @@ import os
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import DataType
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -112,17 +112,24 @@ def get_spark(
     return spark
 
 
-def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
-    """A small driver-built frame (`rows` of tuples, `schema` in DDL) sent
-    to the JVM as one Arrow table. It plans as a LocalTableScan, so scanning
-    it starts no Python worker; `spark.createDataFrame(<list>)` would plan
-    as a PythonRDD scan that starts one Python task per core on every use.
-    Empty `rows` give an empty frame of the schema."""
-    struct = DataType.fromDDL(schema)
-    table = pa.Table.from_pylist(
+def arrow_table(rows: list[tuple], struct: StructType) -> pa.Table:
+    """Driver-side `rows` of tuples as one Arrow table of `struct`."""
+    return pa.Table.from_pylist(
         [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
     )
-    return spark.createDataFrame(table, struct)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small driver-built frame (`rows` of tuples, `schema` in DDL) sent
+    to the JVM as one Arrow table: robots rules, grant budgets, SERP seeds,
+    revoke inputs. It plans as a LocalTableScan, so scanning it starts no
+    Python worker; `spark.createDataFrame(<list>)` would plan as a PythonRDD
+    scan that starts one Python task per core on every use. Empty `rows`
+    give an empty frame of the schema. Small tables that are only written
+    (host_state, metrics) skip Spark altogether: `arrow_table` plus
+    `CheckpointStore.write`."""
+    struct = DataType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(rows, struct), struct)
 
 
 # applicationIds whose engine machinery has been warmed (getOrCreate can

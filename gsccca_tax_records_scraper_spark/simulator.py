@@ -68,6 +68,8 @@ class SimResult:
     spans: dict[str, list[tuple]] = field(default_factory=dict)  # url -> spans
     frontier: list[dict] = field(default_factory=list)
     epochs: int = 0
+    # per-epoch copy of the token bucket after the grant: host -> tokens
+    tokens: list[dict[str, float]] = field(default_factory=list)
 
 
 def _mk_row(url: str, seed_id: int, page: int, link_order: int, depth: int,
@@ -150,6 +152,7 @@ def simulate_crawl(
             granted.extend(rows)
         granted.sort(key=order_key)
         result.grant_order.append([r["url"] for r in granted])
+        result.tokens.append(dict(tokens))
 
         # fetch + parse granted urls; collect out-links
         new_candidates: list[dict] = []

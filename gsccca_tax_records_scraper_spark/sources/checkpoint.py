@@ -23,16 +23,27 @@ when no versioned manifest exists. Snapshot tables (frontier/host_state)
 are read at exactly one epoch; delta tables (seen_exact/seen_state/
 records/documents/metrics/revoked) are read as the union of epochs <= K
 (seen_state additionally keeps only the latest row per bucket — see
-DELTA_TABLES note).
+DELTA_TABLES note). Reads use the table's declared schema (schemas.py)
+rather than inferring one from the parquet footers.
+
+Two tables are written from Arrow on the driver, with no Spark job:
+host_state (one row per host) and metrics (one row per engine-wide count
+plus one per host bucket). Their size is bounded by the host set and the
+bucket fan-out, never by the frontier or the seen set, so building them on
+the driver costs no more than the collects that produce their values. The
+Arrow write is one parquet file plus `_SUCCESS` in the same epoch dir, so
+Spark readers see no difference; every other table is a Spark write,
+labelled `write:<table>` in the event log.
 
 Filesystem abstraction: plain paths use the local POSIX fast path; URI
 workdirs (hdfs://, s3a://, file://, ...) route the manifest/_SUCCESS/rename
-operations through the Hadoop FileSystem API reached over the session's JVM
-gateway (`spark._jvm`) — the same FileSystem the parquet reads/writes
-already use, so a 100-TB deployment points the store at its object store
-with no code change. Note on S3: rename is copy+delete there, so the
-manifest swap is last-writer-wins rather than atomic — single-writer (one
-driver per workdir) is the store's documented contract on object stores.
+operations and the Arrow writes through the Hadoop FileSystem API reached
+over the session's JVM gateway (`spark._jvm`) — the same FileSystem the
+parquet reads/writes already use, so a 100-TB deployment points the store
+at its object store with no code change. Note on S3: rename is copy+delete
+there, so the manifest swap is last-writer-wins rather than atomic —
+single-writer (one driver per workdir) is the store's documented contract
+on object stores.
 """
 
 from __future__ import annotations
@@ -40,9 +51,15 @@ from __future__ import annotations
 import json
 import os
 import re
+from contextlib import contextmanager
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql.types import StructType
+
+from .. import schemas
 
 SNAPSHOT_TABLES = ("frontier", "host_state")
 # seen_state is a ROW-SUPERSEDING delta table: each epoch writes only the
@@ -53,6 +70,28 @@ DELTA_TABLES = ("seen_exact", "seen_state", "records", "documents", "metrics",
 
 _MANIFEST_RE = re.compile(r"^MANIFEST-(\d+)\.json$")
 
+_JOB_DESCRIPTION = "spark.job.description"
+
+
+@contextmanager
+def _job_label(spark: SparkSession, label: str):
+    """Describe the Spark jobs started inside as `label` (the event log and
+    UI show it as the job's description); the caller's description comes
+    back afterwards."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty(_JOB_DESCRIPTION)
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, prev)
+
+
+def _reader(spark: SparkSession, table: str, schema: StructType | None) -> DataFrameReader:
+    """A parquet reader that skips footer inference when the schema is known."""
+    schema = schema or schemas.CHECKPOINT.get(table)
+    return spark.read.schema(schema) if schema is not None else spark.read
+
 
 class _PosixFS:
     """Local-path operations (the fast path: no JVM round-trips)."""
@@ -62,6 +101,12 @@ class _PosixFS:
 
     def exists(self, path: str) -> bool:
         return os.path.exists(path)
+
+    def read_bytes(self, path: str) -> bytes:
+        return Path(path).read_bytes()
+
+    def write_bytes(self, path: str, data: bytes) -> None:
+        Path(path).write_bytes(data)
 
     def read_text(self, path: str) -> str:
         return Path(path).read_text()
@@ -106,26 +151,32 @@ class _HadoopFS:
     def exists(self, path: str) -> bool:
         return bool(self._fs.exists(self._jpath(path)))
 
-    def read_text(self, path: str) -> str:
+    def read_bytes(self, path: str) -> bytes:
         stream = self._fs.open(self._jpath(path))
         try:
-            # readAllBytes avoids a per-byte py4j crawl; manifests are tiny
-            data = bytes(stream.readAllBytes())
+            # readAllBytes avoids a per-byte py4j crawl; only small files
+            # (manifests, driver-written tables) are read this way
+            return bytes(stream.readAllBytes())
         finally:
             stream.close()
-        return data.decode("utf-8")
+
+    def write_bytes(self, path: str, data: bytes) -> None:
+        out = self._fs.create(self._jpath(path), True)
+        try:
+            out.write(bytearray(data))
+        finally:
+            out.close()
+
+    def read_text(self, path: str) -> str:
+        return self.read_bytes(path).decode("utf-8")
 
     def write_text_atomic(self, path: str, text: str) -> None:
         # the versioned-manifest protocol only ever renames onto FRESH
         # names, so this is a plain create+rename — atomic on HDFS — with
         # no delete-then-rename window (r3 ADVICE: delete+rename left a
         # crash window with no manifest at all)
+        self.write_bytes(path + ".tmp", text.encode("utf-8"))
         tmp = self._jpath(path + ".tmp")
-        out = self._fs.create(tmp, True)
-        try:
-            out.write(bytearray(text.encode("utf-8")))
-        finally:
-            out.close()
         dst = self._jpath(path)
         if self._fs.exists(dst):
             self._fs.delete(dst, False)
@@ -259,11 +310,42 @@ class CheckpointStore:
             if self.fs.exists(p):
                 self.fs.delete_dir(p)
 
-    def write(self, table: str, epoch: int, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(self.table_path(table, epoch))
+    def write(self, table: str, epoch: int, data: DataFrame | pa.Table) -> None:
+        """Overwrite `table` at `epoch`. A Spark frame is written by a Spark
+        job labelled `write:<table>`; a `pyarrow.Table` (a small driver-
+        built table) is written by the driver as one parquet file plus
+        `_SUCCESS` through the store's filesystem, with no Spark job."""
+        path = self.table_path(table, epoch)
+        if isinstance(data, pa.Table):
+            buf = pa.BufferOutputStream()
+            pq.write_table(data, buf)
+            self.fs.delete_dir(path)
+            self.fs.mkdirs(path)
+            self.fs.write_bytes(f"{path}/part-00000.parquet", buf.getvalue().to_pybytes())
+            self.fs.write_bytes(f"{path}/_SUCCESS", b"")
+            return
+        with _job_label(data.sparkSession, f"write:{table}"):
+            data.write.mode("overwrite").parquet(path)
 
     def read_snapshot(self, spark: SparkSession, table: str, epoch: int) -> DataFrame:
-        return spark.read.parquet(self.table_path(table, epoch))
+        """The table at exactly `epoch`, read with its declared schema in
+        `schemas.CHECKPOINT` (inferred from the parquet footers only for a
+        table declared nowhere)."""
+        return _reader(spark, table, None).parquet(self.table_path(table, epoch))
+
+    def read_arrow(self, table: str, epoch: int) -> pa.Table:
+        """A small table at exactly `epoch`, read on the driver through the
+        store's filesystem (no Spark job): every parquet file of the epoch
+        dir, whether the driver or a Spark job wrote it."""
+        path = self.table_path(table, epoch)
+        parts = [
+            pq.read_table(pa.BufferReader(self.fs.read_bytes(f"{path}/{name}")))
+            for name in sorted(self.fs.listdir(path))
+            if name.endswith(".parquet") and not name.startswith(("_", "."))
+        ]
+        if not parts:
+            raise FileNotFoundError(f"no parquet file under {path}")
+        return pa.concat_tables(parts)
 
     def compacted_path(self, table: str, epoch: int) -> str:
         return f"{self.workdir}/{table}/compacted={epoch}"
@@ -277,11 +359,13 @@ class CheckpointStore:
         table: str,
         upto_epoch: int,
         manifest: dict | None = None,
+        schema: StructType | None = None,
     ) -> DataFrame | None:
         """Union of the table's delta dirs up to `upto_epoch`, reading the
         latest committed compaction instead of the deltas it folded in.
         `manifest` pins the view to a specific retained manifest (see
-        manifests()); default is the current one."""
+        manifests()); default is the current one. `schema` overrides the
+        declared one (seen_state's layout depends on the dedup backend)."""
         comp = (
             manifest["compacted"].get(table)
             if manifest is not None
@@ -299,10 +383,15 @@ class CheckpointStore:
         ]
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        return _reader(spark, table, schema).parquet(*paths)
 
     def compact_deltas(
-        self, spark: SparkSession, table: str, upto_epoch: int, transform=None
+        self,
+        spark: SparkSession,
+        table: str,
+        upto_epoch: int,
+        transform=None,
+        schema: StructType | None = None,
     ) -> None:
         """Fold all deltas <= upto_epoch into one partitioned dir. Readers
         switch over only at the next manifest commit (the compacted epoch is
@@ -310,13 +399,15 @@ class CheckpointStore:
         dir. Old delta dirs are retained (cheap, crash-safe; a vacuum step
         can remove them once the compaction is committed). `transform`
         (DataFrame -> DataFrame) folds row-superseding tables — e.g.
-        seen_state keeps only the latest row per bucket."""
-        df = self.read_deltas(spark, table, upto_epoch)
+        seen_state keeps only the latest row per bucket. `schema` as in
+        read_deltas."""
+        df = self.read_deltas(spark, table, upto_epoch, schema=schema)
         if df is None:
             return
         if transform is not None:
             df = transform(df)
-        df.write.mode("overwrite").parquet(self.compacted_path(table, upto_epoch))
+        with _job_label(spark, f"compact:{table}"):
+            df.write.mode("overwrite").parquet(self.compacted_path(table, upto_epoch))
         self._pending_compactions = getattr(self, "_pending_compactions", {})
         self._pending_compactions[table] = upto_epoch
 

@@ -116,3 +116,55 @@ def test_metrics_recorded(crawl):
     assert m[(0, "seeds")] == len(SEEDS)
     total_granted = sum(v for (e, k), v in m.items() if k == "granted")
     assert total_granted == sum(len(g) for g in sim.grant_order)
+
+
+def test_host_state_matches_simulator_tokens(crawl):
+    """The committed token bucket after every epoch equals the simulator's
+    `tokens`, float for float, including a host carried through an epoch in
+    which it had no pending URL."""
+    eng, sim = crawl
+    carried = 0
+    for e in range(1, sim.epochs + 1):
+        assert eng._tokens(e) == sim.tokens[e - 1], e
+        pending = {
+            r.host
+            for r in eng.store.read_snapshot(eng.spark, "frontier", e - 1)
+            .select("host").distinct().collect()
+        }
+        carried += len(set(sim.tokens[e - 1]) - pending)
+    assert carried >= 1
+
+
+def test_unthrottled_crawl_skips_tournament(spark, tmp_path, monkeypatch):
+    """With no budget binding, every epoch grants the whole frontier
+    without running the grant tournament, and the crawl still equals the
+    simulator on seen set, grant order and spans."""
+    from gsccca_tax_records_scraper_spark.operators import politeness
+
+    calls = []
+    grant = politeness.grant
+    monkeypatch.setattr(
+        politeness, "grant", lambda *a, **k: calls.append(1) or grant(*a, **k)
+    )
+    eng = CrawlEngine(spark, tmp_path / "wd", epoch_seconds=1e7)
+    n = eng.run(SEEDS)
+    sim = simulator.simulate_crawl(SEEDS, epoch_seconds=1e7)
+    assert calls == []
+    assert n == sim.epochs > 1
+    assert {r.url for r in eng.seen().collect()} == sim.seen_urls
+    by_epoch: dict[int, list] = {}
+    for r in eng.records().collect():
+        by_epoch.setdefault(r.epoch, []).append(r)
+    for e in range(1, sim.epochs + 1):
+        ordered = sorted(
+            by_epoch[e],
+            key=lambda r: (
+                r.crawl_order.depth, r.crawl_order.seed_id,
+                r.crawl_order.page, r.crawl_order.link_order, r.url_id,
+            ),
+        )
+        assert [r.url for r in ordered] == sim.grant_order[e - 1], f"epoch {e}"
+    docs = eng.documents().collect()
+    assert len(docs) == len(sim.spans)
+    for d in docs:
+        assert [(s.kind, s.text, s.media_ref, s.offset) for s in d.spans] == sim.spans[d.url]

@@ -62,12 +62,9 @@ def test_grant_has_no_full_host_window(spark, tmp_path):
     import bench
 
     pending = bench._synth_candidates(spark, 1000)
-    robots = spark.createDataFrame(
-        [("search.gsccca.org", [], 0.25, 10)],
-        "host string, disallow_prefixes array<string>, rate_per_sec double, burst int",
+    granted = politeness.grant(
+        pending, politeness.budget_frame(spark, {"search.gsccca.org": 15})
     )
-    budgets = politeness.compute_budgets(pending, robots, None, 60.0)
-    granted, _ = politeness.grant(pending, budgets, 1)
     plan = explain(granted)
     import re
 
@@ -134,57 +131,19 @@ def test_neardup_pairs_plan_shape(spark, sf01):
     assert plan.count("BroadcastHashJoin") == 2  # both verify joins broadcast
 
 
-def _node_names(plan) -> list[str]:
-    """Operator names of a JVM SparkPlan tree, in pre-order."""
-    names = [plan.nodeName()]
-    kids = plan.children()
-    for i in range(kids.size()):
-        names += _node_names(kids.apply(i))
-    return names
-
-
-def test_host_state_reads_cached_grant(spark):
-    """host_state_after counts grants from the frame grant() returns, so
-    once the caller caches that frame the token-state plan reads the cache
-    (InMemoryTableScan) instead of re-running the window tournament."""
-    from gsccca_tax_records_scraper_spark.operators import politeness
-    from gsccca_tax_records_scraper_spark.session import local_frame
-    import bench
-
-    pending = bench._synth_candidates(spark, 1000)
-    robots = local_frame(
-        spark,
-        [("search.gsccca.org", [], 0.25, 10)],
-        "host string, disallow_prefixes array<string>, rate_per_sec double, burst int",
-    )
-    budgets = politeness.compute_budgets(pending, robots, None, 60.0)
-    granted, host_state_after = politeness.grant(pending, budgets, 1)
-    granted.cache()
-    try:
-        granted.count()
-        # walk the physical operators; the formatted explain would also
-        # print the cached relation's own plan, windows included
-        root = host_state_after._jdf.queryExecution().executedPlan()  # noqa: SLF001
-        if root.nodeName() == "AdaptiveSparkPlan":
-            root = root.inputPlan()
-        nodes = _node_names(root)
-        assert "InMemoryTableScan" in nodes
-        assert "Window" not in nodes
-    finally:
-        granted.unpersist()
-
-
 def test_engine_driver_frames_are_local(spark, tmp_path):
-    """Frames the engine builds from driver-side lists scan as a
-    LocalTableScan, never a PythonRDD (`Scan ExistingRDD`), which would
-    start one Python task per core every time an epoch reads them."""
+    """Frames the engine builds from driver-side lists (the robots rules,
+    the grant's budgets) scan as a LocalTableScan, never a PythonRDD
+    (`Scan ExistingRDD`), which would start one Python task per core every
+    time an epoch reads them."""
+    from gsccca_tax_records_scraper_spark.operators import politeness
     from gsccca_tax_records_scraper_spark.plans.epoch import CrawlEngine
 
     eng = CrawlEngine(spark, tmp_path / "wd")
     frames = [
         eng.robots_df(),
-        eng._metrics_frame(1, {"granted": 3, "new_urls": 5}, {0: 2, 7: 3}),
-        eng._metrics_frame(1, {}, {}),
+        politeness.budget_frame(spark, {"search.gsccca.org": 15, "apps.gsccca.org": 0}),
+        politeness.budget_frame(spark, {}),
     ]
     for df in frames:
         plan = explain(df)

@@ -8,16 +8,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from gsccca_tax_records_scraper_spark.operators import dedup, politeness
+from gsccca_tax_records_scraper_spark.simulator import RobotsRule
 
 import bench
 
+RULES = {"search.gsccca.org": RobotsRule((), 0.25, 10)}
 
-@pytest.fixture(scope="module")
-def robots(spark):
-    return spark.createDataFrame(
-        [("search.gsccca.org", [], 0.25, 10)],
-        "host string, disallow_prefixes array<string>, rate_per_sec double, burst int",
-    )
+
+def _grant(spark, pending, epoch_seconds):
+    """(granted frame, tokens after) for a first epoch (no carry)."""
+    backlog = {r["host"]: r["count"] for r in pending.groupBy("host").count().collect()}
+    budgets, tokens = politeness.compute_budgets(backlog, RULES, {}, epoch_seconds)
+    return politeness.grant(pending, politeness.budget_frame(spark, budgets)), tokens
 
 
 def test_dedup_idempotent(spark, tmp_path):
@@ -52,27 +54,24 @@ def test_dedup_keep_first_picks_crawl_order_min(spark):
 
 
 @pytest.mark.parametrize("epoch_seconds,n_pending", [(40.0, 500), (400.0, 50), (4.0, 3)])
-def test_budget_cap_property(spark, robots, epoch_seconds, n_pending):
+def test_budget_cap_property(spark, epoch_seconds, n_pending):
     """No grant set ever exceeds floor(rate*T) + burst, and when pending
     exceeds the budget exactly budget rows are granted."""
     pending = bench._synth_candidates(spark, n_pending)
-    budgets = politeness.compute_budgets(pending, robots, None, epoch_seconds)
-    granted, state_after = politeness.grant(pending, budgets, 1)
+    granted, tokens = _grant(spark, pending, epoch_seconds)
     n = granted.count()
     cap = int(0.25 * epoch_seconds)  # no carry on epoch 1
     assert n <= cap
     assert n == min(cap, n_pending)
     # token accounting: tokens_after = tokens_before - granted
-    st = {r.host: r.tokens for r in state_after.collect()}
-    assert st["search.gsccca.org"] == pytest.approx(0.25 * epoch_seconds - n)
+    assert tokens["search.gsccca.org"] == pytest.approx(0.25 * epoch_seconds - n)
 
 
-def test_grant_order_is_global_min_prefix(spark, robots):
+def test_grant_order_is_global_min_prefix(spark):
     """The granted set is exactly the first-k rows in total crawl order —
     two-phase pruning must not change the answer."""
     pending = bench._synth_candidates(spark, 2000)
-    budgets = politeness.compute_budgets(pending, robots, None, 400.0)  # k=100
-    granted, _ = politeness.grant(pending, budgets, 1)
+    granted, _ = _grant(spark, pending, 400.0)  # k=100
     key = lambda r: (  # noqa: E731
         r.crawl_order.depth, r.crawl_order.seed_id, r.crawl_order.page,
         r.crawl_order.link_order, r.url_id,

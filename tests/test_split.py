@@ -92,16 +92,13 @@ def test_grant_set_invariant_under_fanout(spark):
         F.when(F.pmod(F.col("url_id"), F.lit(7)) == 0, F.lit("img.gsccca.org"))
         .otherwise(F.col("host")),
     )
-    budgets = spark.createDataFrame(
-        [("search.gsccca.org", 37, 37.0), ("img.gsccca.org", 11, 11.0)],
-        "host string, budget long, tokens_before double",
-    )
+    budgets = politeness.budget_frame(spark, {"search.gsccca.org": 37, "img.gsccca.org": 11})
     n_old = urltools.N_HOST_BUCKETS
-    g_old, _ = politeness.grant(pending, budgets, 1, n_buckets=n_old)
+    g_old = politeness.grant(pending, budgets, n_buckets=n_old)
     re_bucketed = pending.withColumn(
         "host_bucket", urltools.host_bucket_col(F.col("url_id"), n_old * 2)
     )
-    g_new, _ = politeness.grant(re_bucketed, budgets, 1, n_buckets=n_old * 2)
+    g_new = politeness.grant(re_bucketed, budgets, n_buckets=n_old * 2)
     old_ids = {r.url_id for r in g_old.select("url_id").collect()}
     new_ids = {r.url_id for r in g_new.select("url_id").collect()}
     assert old_ids == new_ids and len(old_ids) == 37 + 11
